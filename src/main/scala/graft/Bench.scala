@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Dev-only subset filter (regex on query name); unset = full registry.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     // Cold-cache mode (round-9 judge condition on the two-part bar): one
@@ -16,73 +13,13 @@ object Bench {
     // exactly the cache/memo subsidy. Output goes to BENCH_COLD.json;
     // BENCH_LOCAL.json stays the steady-state census.
     val cold = sys.env.get("SPARK_GRAFT_COLD").contains("1")
-    // Shuffle blocks on tmpfs, uncompressed: same rationale as the stream
-    // harness's /dev/shm checkpoints — the cluster-shape analog is NVMe-
-    // local shuffle storage, and at bench SFs the LZ4 round-trip plus disk
-    // write latency is pure fixed overhead (measured −9% on the full
-    // registry at sf0.1; sf1 shuffle volume is well under the tmpfs bound).
-    // NOT sized for XL SFs: at sf100 the uncompressed shuffle set reaches
-    // ~90 GB and the kernel OOM-kills the JVM — for those columns override
-    // via SPARK_GRAFT_EXTRA_CONF (disk local.dir + LZ4 + more shuffle
-    // partitions; see SCALING.md "row-bound third decade").
-    val localDir = new java.io.File("/dev/shm/graft_spark_local")
-    localDir.mkdirs()
+    val spark = Session()
     def shmUsedMb(): Long = {
       def du(f: java.io.File): Long =
         if (f.isFile) f.length()
         else Option(f.listFiles()).map(_.map(du).sum).getOrElse(0L)
-      du(localDir) / (1024 * 1024)
+      du(new java.io.File(Session.LocalDir)) / (1024 * 1024)
     }
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir.getPath)
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      // Round 12: Spark's generated-class cache holds 100 entries by
-      // default; a 247-query registry overflows it every pass, so every
-      // whole-stage-codegen unit re-ran Janino compilation on every
-      // invocation — THE session-rate disease PLANS.md's "control validity
-      // domain" measured (full-registry control 0.62-0.88 vs 0.27-0.30 in
-      // few-query sessions). Sized to hold the registry's classes once:
-      // same-window A/B at sf0.1 read raw 135.9 → 101.6s (-25%) with the
-      // control itself settling to the quiet-session plateau (0.656 →
-      // 0.264). Not a local[32] trick: any production driver running
-      // hundreds of distinct query shapes pays the same recompilation tax.
-      // Static conf — must be set before the first session; EXTRA_CONF
-      // below can still override it for A/Bs.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Round 13: cached-plan partition sizing. Memoized builder frames were
-      // cached at 32-64 partitions regardless of size, so every downstream
-      // stage scheduled 32-64 near-empty tasks (~3-5ms launch each) and the
-      // concurrent broadcast futures multiplied that (the 32-vs-8-core
-      // inversion, VERDICT r12 #1). Letting AQE re-optimize cached plans and
-      // size coalesced partitions by the ADVISORY BYTE TARGET (not the core
-      // count) makes the partition count track the data: tiny dimension
-      // builds collapse to 1-2 partitions, 100TB frames still get
-      // bytes/64MB at full parallelismFirst semantics. The floor is
-      // minPartitionSize=2m (stock parallelismFirst=true, so big shuffles
-      // keep bytes/parallelism sizing and heavy builds stay parallel; A/B'd
-      // against parallelismFirst=false+64MB advisory and a 4m floor — 2m
-      // kept every tiny-frame win while leaving medium shuffles parallel
-      // enough, the best full-registry total of the three). Inert at scale:
-      // bytes/parallelism >> 2MB on any real input, and a sub-2MB task is
-      // launch overhead on any hardware. Compute-dense iterated frames
-      // additionally pin their parallelism explicitly in their builders
-      // (repartition(P, key)) because a byte-based coalescer cannot see
-      // per-row compute density or explode amplification.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "2m")
-      .config("spark.ui.enabled", "false")
-    // dev A/B lever: SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder = builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Same-window host-rate control (round-10 verdict #2): a FIXED synthetic
     // Spark job — 48M-row range, one hash shuffle to 9973 keys, a 1-row
     // final agg — independent of the registry, the SF dir, and the page
@@ -93,7 +30,7 @@ object Bench {
     // CONTROL_REF was pinned at 0.62 in r11 on the reference host state —
     // rebaseline only if the control WORKLOAD or the session's compilation
     // regime changes, never per round to launder a slow window. Round 12
-    // re-pinned it to 0.26: the codegen-cache fix above moved EVERY
+    // re-pinned it to 0.26: the codegen-cache fix (Session) moved EVERY
     // full-registry session to the deep-JIT plateau the control previously
     // only reached in few-query sessions (measured 0.264/0.294 in the two
     // post-fix runs vs 0.62-0.88 in every pre-fix full census), so the old
@@ -101,10 +38,10 @@ object Bench {
     // r12+ normalized totals are comparable to each other; comparison to
     // the r11 history goes through RAW totals (same host) — the
     // discontinuity is documented in PLANS.md and BASELINE.md.
-    // VALIDITY DOMAIN (round 12, see PLANS.md "control validity domain" and
-    // graft.ControlProbe): the control also tracks in-session JIT/profile
-    // maturity — in a quiet session its own samples decay 0.72->0.30s, and
-    // long few-query SPARK_GRAFT_ONLY subset sessions read 0.27-0.43.
+    // VALIDITY DOMAIN (round 12, see PLANS.md "control validity domain"):
+    // the control also tracks in-session JIT/profile maturity — in a quiet
+    // session its own samples decay 0.72->0.30s, and long few-query
+    // SPARK_GRAFT_ONLY subset sessions read 0.27-0.43.
     // Full-registry sessions hold the 0.62-0.88 band the ref was pinned in,
     // so normalized_total is comparable ONLY between full-registry runs;
     // for subset runs treat control as window-health info and compare RAW

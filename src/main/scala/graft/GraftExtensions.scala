@@ -1,18 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.plans.{AsOfJoinPlan, ForagePeriod, ForagePeriodEnd, PayloadPhash, RangeJoinRule,
+  VecDot, VecExprs, VecSqDistL}
 
-/** Library entry point for session-wide function registration — the
-  * idiomatic packaging for custom Catalyst expressions:
+/** The engine's Catalyst extensions, installed one of two ways:
   *
   * {{{
   * spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * injects the engine's native expressions into every session (including
-  * SQL-only clients), with no per-query `register` calls:
+  * injects them into every session at build (including SQL-only clients);
+  * `GraftExtensions.install(spark)` adds them to a live session. Registry
+  * queries install through `Q.run`, so the harness sessions need neither
+  * the config nor per-query calls.
   *
   *  - `forage_period_end(date, anchorDate)` — the 16-day year-reset period
   *    calendar (W1) as O(1) arithmetic (graft.plans.ForagePeriod)
@@ -22,34 +25,44 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *    (graft.plans.PhashExpr)
   *  - `vec_sqdist_l(arr, arr, off, len)` — exact BIGINT subspace squared
   *    distance, the PQ kernel (graft.plans.VecExprs)
-  *
-  * The per-query `register(spark)` calls remain for sessions built without
-  * the config (the harness path); both routes construct the same
-  * expression nodes.
+  *  - native as-of join planning (`AsOfJoinPlan.AsOfJoinStrategy`)
+  *  - interval-join bucketing rewrite (`RangeJoinRule`, fires when
+  *    `spark.graft.rangeJoin.bucketWidth` > 0)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("forage_period_end"),
-      new ExpressionInfo(classOf[graft.plans.ForagePeriodEnd].getName, "forage_period_end"),
-      (exprs: Seq[Expression]) => graft.plans.ForagePeriod.builder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[graft.plans.VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => graft.plans.VecDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("payload_phash"),
-      new ExpressionInfo(classOf[graft.plans.PayloadPhash].getName, "payload_phash"),
-      (exprs: Seq[Expression]) => graft.plans.PayloadPhash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vec_sqdist_l"),
-      new ExpressionInfo(classOf[graft.plans.VecSqDistL].getName, "vec_sqdist_l"),
-      (exprs: Seq[Expression]) => graft.plans.VecExprs.sqDistBuilder(exprs)))
-    // native as-of join planning (graft.plans.AsOfJoinPlan.AsOfJoin nodes)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinPlan.AsOfJoinStrategy)
-    // interval-join bucketing rewrite (fires when
-    // spark.graft.rangeJoin.bucketWidth > 0)
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
+    ext.injectPlannerStrategy(_ => AsOfJoinPlan.AsOfJoinStrategy)
+    ext.injectOptimizerRule(_ => RangeJoinRule)
+  }
+}
+
+object GraftExtensions {
+
+  /** (SQL name, expression class, builder) of every native function. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("forage_period_end", classOf[ForagePeriodEnd], ForagePeriod.builder),
+    ("vec_dot", classOf[VecDot], exprs => VecDot(exprs.head, exprs(1))),
+    ("payload_phash", classOf[PayloadPhash], exprs => PayloadPhash(exprs.head)),
+    ("vec_sqdist_l", classOf[VecSqDistL], VecExprs.sqDistBuilder))
+
+  /** Adds the functions, the as-of strategy and the range-join rule to a
+    * live session. Idempotent: what the session already has is left alone,
+    * so a repeated call registers nothing (and logs nothing). */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (name, cls, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!registry.lookupFunction(id).exists(_.getClassName == cls.getName))
+        registry.registerFunction(id, new ExpressionInfo(cls.getName, name), builder)
+    }
+    val exp = spark.experimental
+    if (!exp.extraStrategies.contains(AsOfJoinPlan.AsOfJoinStrategy))
+      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinPlan.AsOfJoinStrategy
+    if (!exp.extraOptimizations.contains(RangeJoinRule))
+      exp.extraOptimizations = exp.extraOptimizations :+ RangeJoinRule
   }
 }

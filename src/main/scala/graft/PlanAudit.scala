@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -42,16 +41,15 @@ object PlanAudit {
     case other => other.children.map(runtimeShuffles).sum
   }
 
+  /** Hash/range exchanges in a plan's text: the cold `shuffles` column. A
+    * subtree printed twice (e.g. a cached builder read by two branches)
+    * counts twice. */
+  def exchanges(plan: String): Int =
+    "Exchange (hash|range)partitioning".r.findAllIn(plan).length
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     println("| query | shuffles | runtime | joins | pushed filters |")
     println("|---|---|---|---|---|")
     SparkEntry.registry.foreach { q =>
@@ -59,7 +57,7 @@ object PlanAudit {
         val df = q.run(spark, sfDir)
         val plan = df.queryExecution.executedPlan.toString
         def count(s: String) = s.r.findAllIn(plan).length
-        val shuffles = count("Exchange hashpartitioning") + count("Exchange rangepartitioning")
+        val shuffles = exchanges(plan)
         val joins = Seq(
           "BroadcastHashJoin" -> count("BroadcastHashJoin"),
           "SortMergeJoin" -> count("SortMergeJoin"),

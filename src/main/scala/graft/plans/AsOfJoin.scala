@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -235,14 +235,6 @@ object AsOfJoinPlan {
     }
   }
 
-  /** Register the strategy in a session (idempotent). Also injected
-    * session-wide by graft.GraftExtensions. */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
-
   /** Public API: `AsOf.join(purchases, views, keys = left "user_id" ->
     * right "v_user_id", times = "ts_us" -> "v_ts_us")`. Column names must be
     * disjoint across sides (every column is re-aliased, which also gives
@@ -259,7 +251,7 @@ object AsOfJoinPlan {
            strict: Boolean = true,
            tolerance: Option[Long] = None): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
+    graft.GraftExtensions.install(spark) // a public API, callable outside the registry
     require(left.columns.toSet.intersect(right.columns.toSet).isEmpty,
             "as-of join requires disjoint column names across sides")
     def fresh(df: DataFrame) = df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)

@@ -3,7 +3,6 @@ package graft.plans
 import java.time.LocalDate
 import java.time.temporal.ChronoUnit
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DateType}
@@ -53,11 +52,10 @@ object ForagePeriod {
     end.toEpochDay.toInt
   }
 
-  /** Shared builder for both SQL registration routes (the
-    * `GraftExtensions` session injection and the per-query `register`):
-    * validates the anchor is a foldable non-null DATE instead of letting a
-    * NULL literal unbox silently to epoch day 0 (= anchor 1970-01-01)
-    * through `asInstanceOf[Int]`, or a mistyped literal throw an opaque
+  /** SQL builder (registered by `graft.GraftExtensions`): validates the
+    * anchor is a foldable non-null DATE instead of letting a NULL literal
+    * unbox silently to epoch day 0 (= anchor 1970-01-01) through
+    * `asInstanceOf[Int]`, or a mistyped literal throw an opaque
     * ClassCastException at planning time. */
   def builder(exprs: Seq[Expression]): ForagePeriodEnd = {
     require(exprs.length == 2,
@@ -71,11 +69,6 @@ object ForagePeriod {
         "forage_period_end: anchor folded to NULL")
     }
   }
-
-  /** SQL registration: `forage_period_end(dateCol, DATE 'anchor')`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "forage_period_end", builder, "scala_udf")
 }
 
 /** Codegen-capable scalar: DateType → DateType (period end), null before the

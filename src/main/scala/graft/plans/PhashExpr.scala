@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
@@ -41,12 +40,6 @@ object PhashExpr {
     }
     ph
   }
-
-  /** Session registration for harness-built sessions (the extensions path
-    * registers the same node session-wide). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "payload_phash", exprs => PayloadPhash(exprs.head), "scala_udf")
 }
 
 /** binary → bigint (48 significant bits). Strings implicitly cast to

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, LogicalPlan, Project}
@@ -132,13 +131,5 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       // restore the original output (drop the helper bucket columns)
       Project(j.output, newJoin)
     }
-  }
-
-  /** Attach to an existing session (the harness path; `GraftExtensions`
-    * injects it at session build for `spark.sql.extensions` users). */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(RangeJoinRule))
-      spark.experimental.extraOptimizations = cur :+ RangeJoinRule
   }
 }

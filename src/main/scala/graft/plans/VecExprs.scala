@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -57,8 +56,7 @@ object VecExprs {
     java.lang.Long.valueOf(acc)
   }
 
-  /** Shared `vec_sqdist_l` builder (used by both the temp-function
-    * registration below and `GraftExtensions`' injectFunction): validates
+  /** `vec_sqdist_l` builder (registered by `graft.GraftExtensions`): validates
     * arity and that off/len fold to non-null integral literals — a
     * foldable-but-null (`CAST(NULL AS INT)`) or non-numeric ('3') argument
     * is an argument error, not an NPE/ClassCastException. */
@@ -75,16 +73,6 @@ object VecExprs {
       }
     }
     VecSqDistL(exprs.head, exprs(1), intArg(exprs(2), "off"), intArg(exprs(3), "len"))
-  }
-
-  /** SQL registration: `vec_dot(arrCol, arrCol)` over float/double arrays,
-    * `vec_sqdist_l(arrCol, arrCol, off, len)` over bigint arrays (off/len
-    * foldable int literals — the PQ subspace window). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_sqdist_l", sqDistBuilder, "scala_udf")
   }
 }
 

@@ -63,7 +63,6 @@ object AggQueries {
     // the recursive-CTE calendar — so the closed form is proven equivalent.
     Q("w1_period_expr_scalar", Seq("W1", "F6", "A1", "§2.10"),
       (s, dir) => {
-        graft.plans.ForagePeriod.register(s)
         Tables.lineitem(s, dir)
           .select(to_date(col("l_shipdate")).as("sd"), col("l_quantity"))
           .where(col("sd") >= lit(anchor.toString))

@@ -80,7 +80,6 @@ object AnnQueries {
     * query's coarse cell scored by two O(1) lookups into the broadcast
     * per-query ADC arrays. */
   private def pqCandidates(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.plans.VecExprs.register(s)
     val emb = Tables.embeddings(s, dir)
     val code = emb.where(col("vec_id") < 16)
       .select(col("vec_id").as("code_id"), expr(scaledArr).as("cs"))
@@ -157,7 +156,6 @@ object AnnQueries {
     // Exact brute-force cosine top-10 for a fixed query set (vec_id < 8).
     Q("ann_cosine_topk", Seq("similarity", "J2", "W4"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         // per-vector norms once, before the pair space (O(n·dim), not O(pairs·dim))
         val emb = Tables.embeddings(s, dir).withColumn("nrm", expr(normExpr("embedding")))
         val q = emb.where(col("vec_id") < 8)
@@ -182,7 +180,6 @@ object AnnQueries {
     // candidate set shrinks ~10×; at scale the bucket join is the shuffle.
     Q("ann_ivf_bucketed", Seq("similarity", "J4", "W4"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         val emb = Tables.embeddings(s, dir).withColumn("nrm", expr(normExpr("embedding")))
         val q = emb.where(col("vec_id") < 8)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("nq"), col("label"))
@@ -209,7 +206,6 @@ object AnnQueries {
     // brute force above.
     Q("ann_lsh_hyperplane", Seq("similarity", "J2", "P2"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         val emb = Tables.embeddings(s, dir)
           .withColumn("bucket", expr(sparkBucket("embedding")))
           .withColumn("nrm", expr(normExpr("embedding")))
@@ -319,7 +315,6 @@ object AnnQueries {
         // "ORDER BY d2s, code_id LIMIT 1" window. vs the exploded form this
         // drops a |vecs|×64-row shuffle, a 16× join blow-up of it, and a
         // window sort; the one wide exchange carries |vecs| rows of 2 longs.
-        graft.plans.VecExprs.register(s)
         val scaledArr = "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000000) AS BIGINT))"
         val vecs = Tables.embeddings(s, dir)
           .select(col("vec_id"), expr(scaledArr).as("xs"))
@@ -458,7 +453,6 @@ object AnnQueries {
     // (pos − neg) is the curriculum/difficulty signal miners sort by.
     Q("ann_hard_negatives", Seq("similarity", "J2", "A13", "corpus"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         val emb = Tables.embeddings(s, dir)
           .withColumn("nrm", expr(normExpr("embedding")))
         val anchors = emb.where(col("vec_id") < 8)
@@ -587,7 +581,6 @@ object AnnQueries {
     // per round; the oracle computes the same fixpoint via recursive CTE.
     Q("dedup_semantic_components", Seq("dedup", "similarity", "J2", "W9", "§2.10"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         val emb = Tables.embeddings(s, dir)
         val groups = emb.groupBy(col("embedding")).agg(min("vec_id").as("rep"))
         val members = FrameMemo(s, s"$dir#sem_members") {
@@ -704,7 +697,6 @@ object AnnQueries {
     Q("ann_rrf_hybrid", Seq("similarity", "text", "J2", "W4"),
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.plans.VecExprs.register(s)
         val emb = Tables.embeddings(s, dir).withColumn("nrm", expr(normExpr("embedding")))
         val q = emb.where(col("vec_id") < 4)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("nq"))
@@ -999,7 +991,6 @@ object AnnQueries {
     // cosine queries), so selection is hash-reproducible cross-engine.
     Q("sample_kcenter_coreset", Seq("sampling", "similarity", "W4", "A13", "§2.10"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         val k = 8
         val base = FrameMemo(s, s"$dir#kcenter_base") {
           Tables.embeddings(s, dir)
@@ -1072,7 +1063,6 @@ object AnnQueries {
     // as the cosine queries keeps cross-engine bit parity.
     Q("ann_mmr_rerank", Seq("similarity", "W4", "J4", "A13"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         val lam = 0.7
         val emb = Tables.embeddings(s, dir).withColumn("nrm", expr(normExpr("embedding")))
         val q = emb.where(col("vec_id") < 8)
@@ -1191,7 +1181,6 @@ object AnnQueries {
     // the pair space, and the scan never reads filtered rows' payloads.
     Q("ann_filtered_topk", Seq("similarity", "J1", "F4", "F5", "W4"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         val meta = Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("n_chars"))
         val emb = Tables.embeddings(s, dir)
@@ -1241,7 +1230,6 @@ object AnnQueries {
     // the margin criterion is unchanged.
     Q("mine_bitext_margin", Seq("similarity", "J1", "W4", "A1", "F4"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         val meta = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
         val emb = Tables.embeddings(s, dir)
           .withColumn("nrm", expr(normExpr("embedding")))

@@ -822,7 +822,6 @@ object DedupQueries {
     // across cells, and each cell's pairwise block is an independent task.
     Q("dedup_embedding_cosine", Seq("dedup", "similarity", "J2", "A13"),
       (s, dir) => {
-        graft.plans.VecExprs.register(s)
         // Exact-dup collapse first, the vector analog of dupMembers: group
         // identical (label, embedding) rows, pair DISTINCT vectors only,
         // then expand verified rep pairs to vec_id pairs before the rollup

@@ -156,7 +156,6 @@ object JoinQueries {
     // PlanRegressionSpec asserts the rewritten plan hash-joins.
     Q("j_range_bucketed", Seq("J2", "F1", "A12", "§2.10"),
       (s, dir) => {
-        graft.plans.RangeJoinRule.register(s)
         // NB the conf must still be set when the returned frame EXECUTES
         // (optimization is lazy), so it stays on for the session; the rule's
         // strict pattern guard (pure cross-side interval, integral types, no

@@ -190,7 +190,6 @@ object MultimodalQueries {
     // decoded once, map-side, and only 8-byte hashes shuffle.
     Q("mm_phash_dedup", Seq("multimodal", "dedup", "P2", "J2"),
       (s, dir) => {
-        graft.plans.PhashExpr.register(s)
         // n = 0 guard keeps Spark aligned with the oracle: an empty payload
         // would otherwise hash to all-ones (0 >= 0 per bit) while the
         // oracle's generate_series(0, -1) drops the row entirely. The hash
@@ -229,7 +228,6 @@ object MultimodalQueries {
     // candidates, never all-pairs.
     Q("mm_crossmodal_dedup", Seq("multimodal", "dedup", "J2", "A12"),
       (s, dir) => {
-        graft.plans.PhashExpr.register(s)
         val docs = Tables.documents(s, dir)
         val hashed = Multimodal.withPayload(docs)
           .where(length(col("text")) > 0)

@@ -246,7 +246,6 @@ object StreamOps {
     * watermark cutoff `p_end <= max event date − 1 day`. */
   def foragePeriodStream(spark: SparkSession, dir: String): DataFrame = {
     graft.core.Tables.events(spark, dir)
-    graft.plans.ForagePeriod.register(spark)
     val name = s"graft_period_${runCounter.incrementAndGet()}"
     val stream = spark.readStream
       .schema(tableSchema(spark, s"$dir/events.parquet"))

@@ -1,10 +1,14 @@
 package graft
 
+import graft.plans.{AsOfJoinPlan, RangeJoinRule}
+import graft.queries.AnnQueries
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft.GraftExtensions injects the engine's native expressions
-  * session-wide via spark.sql.extensions (no register() calls).
+  * session-wide via spark.sql.extensions, or installs them into a live
+  * session (`GraftExtensions.install`, which `Q.run` calls).
   *
   * Extensions apply at session build time, so this needs its own
   * SparkSession instance; it shares the suite-wide SparkContext (a second
@@ -42,5 +46,25 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)
     }
+  }
+
+  test("a registry query installs vec_dot itself on a bare session") {
+    val spark = SparkTestSession.spark.newSession()
+    assert(spark.sessionState.functionRegistry.lookupFunction(FunctionIdentifier("vec_dot")).isEmpty)
+    val q = AnnQueries.all.find(_.name == "ann_cosine_topk").get
+    assert(q.run(spark, "/root/testdata/sf0.001").count() > 0)
+  }
+
+  test("install is idempotent: one strategy, one rule, nothing re-registered") {
+    val spark = SparkTestSession.spark.newSession()
+    GraftExtensions.install(spark)
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("forage_period_end", "vec_dot", "payload_phash", "vec_sqdist_l")
+      .map(FunctionIdentifier(_))
+    val infos = names.map(registry.lookupFunction(_).get)
+    GraftExtensions.install(spark)
+    assert(spark.experimental.extraStrategies.count(_ == AsOfJoinPlan.AsOfJoinStrategy) == 1)
+    assert(spark.experimental.extraOptimizations.count(_ == RangeJoinRule) == 1)
+    names.zip(infos).foreach { case (id, info) => assert(registry.lookupFunction(id).get eq info, id) }
   }
 }

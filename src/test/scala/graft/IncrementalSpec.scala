@@ -32,7 +32,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("ForagePeriodEnd: null before anchor; codegen path matches eval") {
-    ForagePeriod.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq("1994-12-31", "1995-01-01", "1995-01-16", "1995-12-31", "1996-01-01", "1996-01-02")
       .toDF("s").select(to_date($"s").as("d"))
       .withColumn("p_end", expr("forage_period_end(d, DATE '1995-01-01')"))

@@ -72,7 +72,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("payload_phash codegen expression matches the kernel on every doc") {
-    graft.plans.PhashExpr.register(spark)
+    GraftExtensions.install(spark)
     import org.apache.spark.sql.functions.expr
     val got = graft.core.Tables.documents(spark, dir)
       .select(col("doc_id"), expr("payload_phash(CAST(text AS BINARY))").as("ph"),

@@ -88,7 +88,7 @@ class PlanRegressionSpec extends AnyFunSuite {
 
   test("RangeJoinRule leaves equi-keyed and disabled joins untouched") {
     import org.apache.spark.sql.functions._
-    graft.plans.RangeJoinRule.register(spark)
+    GraftExtensions.install(spark)
     val l = spark.range(100).select(col("id").as("k"), (col("id") * 2).as("lo"),
                                     (col("id") * 2 + 5).as("hi"))
     val r = spark.range(100).select(col("id").as("k2"), (col("id") * 3).as("v"))
@@ -441,7 +441,7 @@ class PlanRegressionSpec extends AnyFunSuite {
     // guard is the step scan itself
     val stepPlan = {
       import org.apache.spark.sql.functions._
-      graft.plans.VecExprs.register(spark)
+      GraftExtensions.install(spark)
       val base = spark.read.parquet(s"$dir/embeddings.parquet")
         .withColumn("nx", expr("vec_dot(embedding, embedding)"))
         .withColumn("dmin", col("nx"))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.VecExprs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +13,7 @@ class VecDotSpec extends AnyFunSuite {
     "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
   test("vec_dot equals the zip_with left fold bit-for-bit (float arrays)") {
-    VecExprs.register(spark)
+    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(42)
     val pairs = Seq.fill(200)((Array.fill(64)(rnd.nextFloat() * 20f - 10f),
                                Array.fill(64)(rnd.nextFloat() * 20f - 10f)))
@@ -29,7 +28,7 @@ class VecDotSpec extends AnyFunSuite {
   }
 
   test("vec_sqdist_l equals the sliced zip_with fold exactly (long arrays)") {
-    VecExprs.register(spark)
+    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(7)
     val pairs = Seq.fill(200)((Array.fill(64)(rnd.nextInt(20000001).toLong - 10000000L),
                                Array.fill(64)(rnd.nextInt(20000001).toLong - 10000000L)))
@@ -50,7 +49,7 @@ class VecDotSpec extends AnyFunSuite {
   }
 
   test("vec_dot handles double-array planes and null elements") {
-    VecExprs.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       "SELECT vec_dot(array(CAST(1.5 AS FLOAT), CAST(-2 AS FLOAT)), array(2.0D, 0.25D)) AS d").head()
     assert(r.getDouble(0) == 1.5 * 2.0 + (-2.0 * 0.25))

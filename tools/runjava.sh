@@ -1,5 +1,5 @@
 #!/bin/bash
-# Dev-only: run a graft main (Bench/Verify/PlanAudit/Scratch) straight from
+# Dev-only: run a graft main (Bench/Verify/PlanAudit/tools.Trace) straight from
 # the compiled classes, bypassing the sbt launcher and its project lock —
 # lets long SPARK_GRAFT_ONLY subset benches run in parallel with sbt work.
 # Mirrors build.sbt's fork settings (JDK17 add-opens, heap, UTC, no UI).
