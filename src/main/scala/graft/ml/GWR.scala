@@ -28,10 +28,31 @@ object GWR {
   /** One calibration observation: coords, feature vector, target. */
   final case class Obs(px: Double, py: Double, f: Array[Double], y: Double)
 
-  /** Solve A x = b for small dense symmetric A (Gaussian elim, partial pivot). */
-  private def solve(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
+  /** A calibration set in structure-of-arrays form: coordinates `xs`/`ys`,
+    * the features `f` row-major (`nf` per row) and the targets `y`. Build it
+    * once per calibration set — once per broadcast — so that no fit
+    * allocates anything per calibration row. */
+  final class Calib private (val xs: Array[Double], val ys: Array[Double],
+                             val f: Array[Double], val y: Array[Double],
+                             val nf: Int) extends Serializable {
+    def n: Int = xs.length
+  }
+
+  object Calib {
+    def apply(obs: Array[Obs]): Calib = {
+      val nf = obs(0).f.length
+      val f = new Array[Double](obs.length * nf)
+      var c = 0
+      while (c < obs.length) { System.arraycopy(obs(c).f, 0, f, c * nf, nf); c += 1 }
+      new Calib(obs.map(_.px), obs.map(_.py), f, obs.map(_.y), nf)
+    }
+  }
+
+  /** Solve A x = b for small dense symmetric A (row-major, n×n) by Gaussian
+    * elimination with partial pivoting. */
+  private def solve(a: Array[Double], b: Array[Double]): Array[Double] = {
     val n = b.length
-    val m = Array.tabulate(n)(i => a(i) :+ b(i))
+    val m = Array.tabulate(n)(i => a.slice(i * n, i * n + n) :+ b(i))
     var col = 0
     while (col < n) {
       var piv = col
@@ -54,42 +75,59 @@ object GWR {
     Array.tabulate(n)(i => m(i)(n) / m(i)(i))
   }
 
-  /** Weighted least squares at one point: gaussian kernel weights over
-    * coordinate distance, design matrix [1, f…]. Returns coefficient vector
-    * b (length k+1); prediction = b · [1, f*]. */
-  def fitAt(px: Double, py: Double, calib: Array[Obs], bandwidth: Double): Array[Double] = {
-    val k = calib(0).f.length + 1
-    val xtx = Array.ofDim[Double](k, k)
+  /** The one GWR kernel: the weighted normal equations at (px, py), as
+    * (XᵀWX row-major k×k, XᵀWy) with design rows [1, f…] (k = nf + 1).
+    * Each calibration row gets the gaussian weight of its coordinate
+    * distance and is skipped when w ≤ 1e-12. Rows are summed in calibration
+    * order, each as xtx(i)(j) += (w·row(i))·row(j); MlSpec pins the result
+    * bit for bit against that per-row loop. Nothing is allocated per row. */
+  private def normalEquations(px: Double, py: Double, cal: Calib,
+                              bandwidth: Double): (Array[Double], Array[Double]) = {
+    val nf = cal.nf
+    val k = nf + 1
+    val xs = cal.xs
+    val ys = cal.ys
+    val f = cal.f
+    val y = cal.y
+    val xtx = new Array[Double](k * k)
     val xty = new Array[Double](k)
+    val row = new Array[Double](k)
+    row(0) = 1.0
     val invBw2 = 1.0 / (bandwidth * bandwidth)
     var c = 0
-    while (c < calib.length) {
-      val o = calib(c)
-      val dx = o.px - px
-      val dy = o.py - py
+    while (c < xs.length) {
+      val dx = xs(c) - px
+      val dy = ys(c) - py
       val w = math.exp(-0.5 * (dx * dx + dy * dy) * invBw2)
       if (w > 1e-12) {
-        val row = new Array[Double](k)
-        row(0) = 1.0
-        var j = 1
-        while (j < k) { row(j) = o.f(j - 1); j += 1 }
+        System.arraycopy(f, c * nf, row, 1, nf)
+        val yc = y(c)
         var i = 0
         while (i < k) {
           val wi = w * row(i)
-          var j2 = 0
-          while (j2 < k) { xtx(i)(j2) += wi * row(j2); j2 += 1 }
-          xty(i) += wi * o.y
+          val r = i * k
+          var j = 0
+          while (j < k) { xtx(r + j) += wi * row(j); j += 1 }
+          xty(i) += wi * yc
           i += 1
         }
       }
       c += 1
     }
+    (xtx, xty)
+  }
+
+  /** Weighted least squares at one point: gaussian kernel weights over
+    * coordinate distance, design matrix [1, f…]. Returns coefficient vector
+    * b (length k+1); prediction = b · [1, f*]. */
+  def fitAt(px: Double, py: Double, calib: Calib, bandwidth: Double): Array[Double] = {
+    val (xtx, xty) = normalEquations(px, py, calib, bandwidth)
     solve(xtx, xty)
   }
 
   /** Predict the target at (px, py) with features f*. */
   def predictAt(px: Double, py: Double, f: Array[Double],
-                calib: Array[Obs], bandwidth: Double): Double = {
+                calib: Calib, bandwidth: Double): Double = {
     val b = fitAt(px, py, calib, bandwidth)
     var s = b(0)
     var j = 0
@@ -106,7 +144,7 @@ object GWR {
       var i = 0
       while (i < calib.length) {
         val o = calib(i)
-        val others = calib.patch(i, Nil, 1)
+        val others = Calib(calib.patch(i, Nil, 1))
         val pred = predictAt(o.px, o.py, o.f, others, bw)
         val e = pred - o.y
         sse += e * e
@@ -119,12 +157,12 @@ object GWR {
     * nearest calibration point (self included, 1-indexed), with mgwr's
     * tiny multiplicative guard so the k-th neighbor itself keeps a
     * nonzero weight. */
-  def adaptiveBandwidth(px: Double, py: Double, calib: Array[Obs], k: Int): Double = {
-    val d2 = new Array[Double](calib.length)
+  def adaptiveBandwidth(px: Double, py: Double, calib: Calib, k: Int): Double = {
+    val d2 = new Array[Double](calib.n)
     var i = 0
-    while (i < calib.length) {
-      val dx = calib(i).px - px
-      val dy = calib(i).py - py
+    while (i < calib.n) {
+      val dx = calib.xs(i) - px
+      val dy = calib.ys(i) - py
       d2(i) = dx * dx + dy * dy
       i += 1
     }
@@ -136,58 +174,32 @@ object GWR {
     * returning (fitted value ŷᵢ, hat-matrix diagonal sᵢᵢ). sᵢᵢ is the
     * leverage wᵢᵢ·xᵢᵀ(XᵀWX)⁻¹xᵢ with wᵢᵢ = 1 (own-point distance 0), the
     * quantity AICc's tr(S) sums. */
-  private def fitWithLeverage(i: Int, calib: Array[Obs], nn: Int): (Double, Double) = {
-    val o = calib(i)
-    val bw = adaptiveBandwidth(o.px, o.py, calib, nn)
-    val k = o.f.length + 1
-    val xtx = Array.ofDim[Double](k, k)
-    val xty = new Array[Double](k)
-    val invBw2 = 1.0 / (bw * bw)
-    var c = 0
-    while (c < calib.length) {
-      val p = calib(c)
-      val dx = p.px - o.px
-      val dy = p.py - o.py
-      val w = math.exp(-0.5 * (dx * dx + dy * dy) * invBw2)
-      if (w > 1e-12) {
-        val row = new Array[Double](k)
-        row(0) = 1.0
-        var j = 1
-        while (j < k) { row(j) = p.f(j - 1); j += 1 }
-        var a = 0
-        while (a < k) {
-          val wa = w * row(a)
-          var b = 0
-          while (b < k) { xtx(a)(b) += wa * row(b); b += 1 }
-          xty(a) += wa * p.y
-          a += 1
-        }
-      }
-      c += 1
-    }
+  private def fitWithLeverage(i: Int, calib: Calib, nn: Int): (Double, Double) = {
+    val (px, py) = (calib.xs(i), calib.ys(i))
+    val (xtx, xty) = normalEquations(px, py, calib, adaptiveBandwidth(px, py, calib, nn))
+    val k = calib.nf + 1
     val xi = new Array[Double](k)
     xi(0) = 1.0
-    var j = 1
-    while (j < k) { xi(j) = o.f(j - 1); j += 1 }
+    System.arraycopy(calib.f, i * calib.nf, xi, 1, calib.nf)
     val beta = solve(xtx, xty)
     val z = solve(xtx, xi) // (XᵀWX)⁻¹ xᵢ for the leverage
     var yhat = 0.0
     var sii = 0.0
-    j = 0
+    var j = 0
     while (j < k) { yhat += beta(j) * xi(j); sii += xi(j) * z(j); j += 1 }
     (yhat, sii)
   }
 
   /** Corrected AIC of the adaptive-kernel GWR with `nn` nearest neighbors:
     * AICc = n·ln(RSS/n) + n·ln(2π) + n·(n + tr(S)) / (n − 2 − tr(S)). */
-  def aiccAdaptive(calib: Array[Obs], nn: Int): Double = {
-    val n = calib.length
+  def aiccAdaptive(calib: Calib, nn: Int): Double = {
+    val n = calib.n
     var rss = 0.0
     var trS = 0.0
     var i = 0
     while (i < n) {
       val (yhat, sii) = fitWithLeverage(i, calib, nn)
-      val e = calib(i).y - yhat
+      val e = calib.y(i) - yhat
       rss += e * e
       trS += sii
       i += 1
@@ -202,9 +214,9 @@ object GWR {
     * shape, including its default lower bound of 40 + 2·(#params) and
     * integer rounding of the probe points. Unimodality of AICc in k is
     * assumed, as in mgwr; evaluations are memoized. */
-  def bandwidthAdaptiveAicc(calib: Array[Obs], kMin: Int = 0, kMax: Int = 0): Int = {
-    val nParams = calib(0).f.length + 1
-    val n = calib.length
+  def bandwidthAdaptiveAicc(calib: Calib, kMin: Int = 0, kMax: Int = 0): Int = {
+    val nParams = calib.nf + 1
+    val n = calib.n
     val lo0 = if (kMin > 0) kMin else math.min(40 + 2 * nParams, n)
     val hi0 = if (kMax > 0) kMax else n
     require(lo0 <= hi0, s"bandwidth search range empty: [$lo0, $hi0]")

@@ -68,32 +68,36 @@ object Forage {
     * 100×. `calibCap` bounds the collect: inputs at or under the cap are
     * used whole (reference-identical), larger inputs are strided down
     * deterministically by a hash of the row key, so the sample — and the
-    * fitted surface — is stable across runs and partitionings. */
+    * fitted surface — is stable across runs and partitionings.
+    *
+    * `combined` is read four times (F7 guard, calibration collect,
+    * distinct-coordinate fit set, final scoring join), so the caller owns
+    * making it cheap to re-read: the job hands in the parquet it has
+    * already written, `forage_pipeline_e2e` caches its stage-1 frame. */
   def stage2Score(spark: SparkSession, combined: DataFrame, bandwidth: Double = 1.0,
                   calibCap: Long = 20000): DataFrame = {
-    // stage 1's output is read four times below (F7 guard, calibration
-    // collect, distinct-coordinate fit set, final scoring join) — cache it
-    // rather than recompute the upstream composite 4×. CacheManager dedups
-    // by canonicalized plan, so repeated pipeline runs share one entry.
-    val input = combined.cache()
     // one action serves both the F7 empty guard and the calibration modulus
     // (r5 ran isEmpty + count as two separate jobs over the composite)
-    val nRows = input.count()
+    val nRows = combined.count()
     if (nRows == 0L) // F7 guard
-      return input.withColumn("pred", lit(0.0)).withColumn("biom", lit(0.0)).limit(0)
+      return combined.withColumn("pred", lit(0.0)).withColumn("biom", lit(0.0)).limit(0)
     import spark.implicits._
-    val clean = input.na.fill(0.0, Seq("ndvi", "sm", "preci")) // P8
+    val clean = combined.na.fill(0.0, Seq("ndvi", "sm", "preci")) // P8
     val calibSrc =
       if (nRows <= calibCap) clean
       else { // every m-th row by stable key hash — deterministic at any parallelism
         val m = (nRows + calibCap - 1) / calibCap
         clean.where(pmod(xxhash64(col("lon"), col("lat"), col("date")), lit(m)) === 0)
       }
-    val calib = calibSrc.select("lon", "lat", "sm", "preci", "ndvi")
+    val calib = GWR.Calib(calibSrc.select("lon", "lat", "sm", "preci", "ndvi")
       .as[(Double, Double, Double, Double, Double)].collect()
-      .map(r => GWR.Obs(r._1, r._2, Array(r._3, r._4), r._5))
+      .map(r => GWR.Obs(r._1, r._2, Array(r._3, r._4), r._5)))
     val bcast = spark.sparkContext.broadcast(calib)
+    // the distinct coordinates are small enough for AQE to coalesce them
+    // into one partition; spread them over every core so the O(cells ×
+    // calib) fit runs in parallel (each cell's fit is independent)
     val coefs = clean.select("lon", "lat").distinct()
+      .repartition(spark.sparkContext.defaultParallelism)
       .as[(Double, Double)]
       .mapPartitions { it =>
         val c = bcast.value

@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
 
 /** The reference's scheduled entrypoint (`ForecastMain.py` + the
   * `data.json` config block, `data_extraction_v2.py:27-51`) as a typed
-  * config + one `run()`: stages 1–5 chained over three point-sample
-  * sources, outputs written as date-partitioned parquet (K3) plus the
-  * forecast payload table (K5).
+  * config + one `run()`: stages 1–5 over three point-sample sources,
+  * outputs written as date-partitioned parquet (K3) plus the forecast
+  * payload table (K5). Stages 2, 4 and 5 read the parquet their upstream
+  * stage wrote (`combined`, `cells`, `trends`), so the stage-2 GWR surface
+  * is fitted exactly once per run.
   *
   * Watermark semantics preserved: only composite periods ending on or
   * before `currentDate − dataLatencyDays` are processed
@@ -69,19 +71,22 @@ object ForageJob {
   private def runStages(spark: SparkSession, cfg: ForageConfig,
                         combinedPath: String): Map[String, String] = {
     def src(path: String) = spark.read.parquet(path)
-    val combined = Forage.stage1Combined(
-      ndvi = src(cfg.ndviPath), sm = src(cfg.smPath), preci = src(cfg.preciPath),
-      anchor = cfg.anchor, watermark = watermark(cfg))
-    val scored = Forage.stage2Score(spark, combined, cfg.bandwidth)
-    val cells = Forage.stage3Rasterize(scored)
     val out = scala.collection.mutable.Map[String, String]()
 
-    combined.write.mode("overwrite").parquet(combinedPath) // ≙ combined.csv
+    Forage.stage1Combined(
+      ndvi = src(cfg.ndviPath), sm = src(cfg.smPath), preci = src(cfg.preciPath),
+      anchor = cfg.anchor, watermark = watermark(cfg))
+      .write.mode("overwrite").parquet(combinedPath) // ≙ combined.csv
     out += "combined" -> combinedPath
 
+    // stages 2 and 4 consume the partitions already written, never an
+    // upstream lineage: stage 2 reads its input four times, and stage 4's
+    // three reads of the cells lineage would each re-run the stage-2 fit
+    val cells = Forage.stage3Rasterize(Forage.stage2Score(spark, src(combinedPath), cfg.bandwidth))
     val cellsPath = s"${cfg.outputDir}/cells"
     cells.write.mode("overwrite").partitionBy("date").parquet(cellsPath) // ≙ raster mosaic
     out += "cells" -> cellsPath
+    val cellsBack = src(cellsPath)
 
     // K2 + K7: the reference's physical stage-3 contract — one float32
     // GeoTIFF per date named biomass_YYYYMMDD.tif (the date regex IS the
@@ -99,10 +104,8 @@ object ForageJob {
     if (stale != null) stale.filter(f => f.getName.startsWith("biomass_") &&
       f.getName.endsWith(".tif")).foreach(_.delete())
     val fmt = java.time.format.DateTimeFormatter.BASIC_ISO_DATE
-    // read the just-written date-partitioned parquet back, NOT the cells
-    // lineage: each per-date filter then prunes to one partition directory
-    // instead of re-running stages 1-3 once per date
-    val cellsBack = spark.read.parquet(cellsPath)
+    // each per-date filter over the written cells prunes to one partition
+    // directory instead of re-running stages 1-3 once per date
     val dates = cellsBack.select("date").distinct().orderBy("date")
       .collect().map(_.getDate(0))
     val names = dates.map { d =>
@@ -131,7 +134,7 @@ object ForageJob {
     }
 
     if (cfg.zones.nonEmpty) {
-      val zonal = Forage.stage4Zonal(spark, cells, cfg.zones)
+      val zonal = Forage.stage4Zonal(spark, cellsBack, cfg.zones)
       val trendsPath = s"${cfg.outputDir}/trends"
       zonal.write.mode("overwrite").partitionBy("date").parquet(trendsPath) // ≙ woredas.h5
       out += "trends" -> trendsPath

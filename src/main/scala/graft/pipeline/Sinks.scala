@@ -9,17 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** K1: single-file CSV, the reference's inter-stage handoff format. */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
-
-  /** K3: the zone-series store — partitioned parquet with dynamic
-    * overwrite-by-partition replacing HDF5 resize+append. */
-  def writeZoneSeries(df: DataFrame, path: String): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.partitionBy("zone_id").mode("overwrite").parquet(path)
-  }
-
   /** K4/K5: the REST payload rows — `[{extId, mean (null-if-NaN), date}]`
     * (`BiomassAggregate.py:367-395`, `BiomassForecast.py:104-144`). Returns
     * JSON strings ready for any transport; rounding decimals differ between

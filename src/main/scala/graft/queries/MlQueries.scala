@@ -204,9 +204,9 @@ object MlQueries {
             val m = (nRows + calibCap - 1) / calibCap
             pts.where(pmod(xxhash64(col("id")), lit(m)) === 0)
           }
-        val calib = calibSrc
+        val calib = GWR.Calib(calibSrc
           .as[(Long, Double, Double, Double, Double, Double)].collect()
-          .map(r => GWR.Obs(r._2, r._3, Array(r._4, r._5), r._6))
+          .map(r => GWR.Obs(r._2, r._3, Array(r._4, r._5), r._6)))
         val bcast = s.sparkContext.broadcast(calib)
         val bw = 10.0
         val coefs = pts.select("px", "py").distinct()

@@ -36,10 +36,13 @@ object PipelineQueries {
         // collect (driver actions during plan CONSTRUCTION) and the O(coords
         // × calib) kernel fit. Disclosed with the other FrameMemo builders
         // in BENCHCMP.md; stages 3-4 (burn, zonal cascade) run per pass.
+        // stage 2 reads its input four times, so the stage-1 composite is
+        // cached here rather than recomputed per read.
         val scored = FrameMemo(s, s"$dir#e2e_scored") {
           val combined = Forage.stage1Combined(
             ndvi = src("view", 0.001), sm = src("click", 0.01), preci = src("purchase", 0.1),
             anchor = LocalDate.parse("2024-01-01"), watermark = LocalDate.parse("2024-01-31"))
+            .cache()
           Forage.stage2Score(s, combined, bandwidth = 0.5)
         }
         val cells = Forage.stage3Rasterize(scored)

@@ -1,7 +1,14 @@
 package graft
 
 import java.nio.file.Files
-import graft.pipeline.ForageJob
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import graft.pipeline.{Forage, ForageJob}
+import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.{DataWritingCommandExec, ExecutedCommandExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The configured 5-stage job (the reference's scheduled entrypoint):
@@ -51,6 +58,59 @@ class ForageJobSpec extends AnyFunSuite {
     assert(eml.contains("<li>biomass_20240116.tif</li>"))
     val check = new java.io.File(out, "Output_check")
     assert(check.isDirectory && check.list().isEmpty)
+  }
+
+  /** Stage-2 fit operators in an executed plan: `MapPartitionsExec` nodes
+    * whose function was defined in `graft.pipeline.Forage` (the per-cell GWR
+    * fit is the pipeline's only typed `mapPartitions`). A cached relation is
+    * not descended into: its plan runs only when the cache is built. */
+  private def fitPasses(plan: SparkPlan): Int = {
+    val self = plan match {
+      case m: MapPartitionsExec if m.func.getClass.getName.startsWith("graft.pipeline.Forage$") => 1
+      case _ => 0
+    }
+    val kids = plan match {
+      case a: AdaptiveSparkPlanExec  => Seq(a.executedPlan)
+      case q: QueryStageExec         => Seq(q.plan)
+      case _: InMemoryTableScanExec  => Nil
+      case d: DataWritingCommandExec => Seq(d.child)
+      case e: ExecutedCommandExec    => e.children
+      case other                     => other.children ++ other.subqueries
+    }
+    self + kids.map(fitPasses).sum
+  }
+
+  test("ForageJob fits the GWR surface once; stage 4 reads the written cells") {
+    val out = Files.createTempDirectory("graft_job_fit").toFile.getAbsolutePath
+    val marker = "forage_job_spec_done"
+    val passes = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) done.countDown()
+        else passes.addAndGet(fitPasses(qe.executedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val paths =
+      try {
+        val p = ForageJob.runOnHarness(spark, "/root/testdata/sf0.001", out)
+        // listener events arrive in order: once the marker action is seen,
+        // every action of the job has been counted
+        spark.range(1).toDF(marker).collect()
+        assert(done.await(60, TimeUnit.SECONDS))
+        p
+      } finally spark.listenerManager.unregister(listener)
+    assert(passes.get == 1)
+
+    val trends = spark.read.parquet(paths("trends"))
+    val zones = Seq(
+      "Z_WEST" -> "POLYGON((35.95 15.05, 36.75 15.05, 36.75 13.9, 35.95 13.9, 35.95 15.05))",
+      "Z_EAST" -> "POLYGON((36.75 15.05, 37.55 15.05, 37.55 13.9, 36.75 13.9, 36.75 15.05))")
+    val expected = Forage.stage4Zonal(spark, spark.read.parquet(paths("cells")), zones)
+      .select(trends.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+    assert(trends.count() > 0)
+    assert(trends.exceptAll(expected).isEmpty && expected.exceptAll(trends).isEmpty)
   }
 
   test("K8 failure contract: truncate downstream, drop the failure notice, rethrow") {

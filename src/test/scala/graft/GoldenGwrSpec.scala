@@ -25,9 +25,9 @@ class GoldenGwrSpec extends AnyFunSuite {
 
     // calibration: every 8th point (mgwr calibrates on all 19k; a strided
     // sample keeps the test fast while preserving spatial coverage)
-    val calib = res.zipWithIndex.collect { case (r, i) if i % 8 == 0 =>
+    val calib = GWR.Calib(res.zipWithIndex.collect { case (r, i) if i % 8 == 0 =>
       GWR.Obs(r._1, r._2, Array(r._4, r._5), r._3)
-    }
+    })
     // bandwidth in degrees; mgwr's adaptive-NN kernel ~ a few dozen
     // neighbors on a ~0.035° grid ≈ 0.3-0.5° gaussian radius
     val bw = 0.4

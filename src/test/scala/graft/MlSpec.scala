@@ -59,26 +59,80 @@ class MlSpec extends AnyFunSuite {
 
   test("GWR: recovers a global linear model exactly") {
     val rnd = new scala.util.Random(1)
-    val calib = Array.tabulate(200) { _ =>
+    val calib = GWR.Calib(Array.tabulate(200) { _ =>
       val px = rnd.nextDouble() * 10
       val py = rnd.nextDouble() * 10
       val f1 = rnd.nextDouble() * 5
       val f2 = rnd.nextDouble() * 3
       GWR.Obs(px, py, Array(f1, f2), 2.0 + 3.0 * f1 - 1.5 * f2)
-    }
+    })
     val pred = GWR.predictAt(5.0, 5.0, Array(2.0, 1.0), calib, bandwidth = 2.0)
     assert(math.abs(pred - (2.0 + 6.0 - 1.5)) < 1e-6)
   }
 
   test("GWR: locality — nearby calibration dominates") {
     // two spatial clusters with different intercepts
-    val calib =
+    val calib = GWR.Calib(
       Array.tabulate(50)(i => GWR.Obs(0.0 + i * 0.01, 0.0, Array(1.0), 10.0)) ++
-      Array.tabulate(50)(i => GWR.Obs(100.0 + i * 0.01, 0.0, Array(1.0), 50.0))
+      Array.tabulate(50)(i => GWR.Obs(100.0 + i * 0.01, 0.0, Array(1.0), 50.0)))
     val near0 = GWR.predictAt(0.2, 0.0, Array(1.0), calib, bandwidth = 5.0)
     val near100 = GWR.predictAt(100.2, 0.0, Array(1.0), calib, bandwidth = 5.0)
     assert(math.abs(near0 - 10.0) < 0.5)
     assert(math.abs(near100 - 50.0) < 0.5)
+  }
+
+  // the per-row kernel as first written (one design row allocated per
+  // calibration row, 2-D normal equations), kept as the reference the
+  // shared kernel must match bit for bit
+  private def naiveFitAt(px: Double, py: Double, calib: Array[GWR.Obs], bw: Double): Array[Double] = {
+    val k = calib(0).f.length + 1
+    val xtx = Array.ofDim[Double](k, k)
+    val xty = new Array[Double](k)
+    val invBw2 = 1.0 / (bw * bw)
+    for (o <- calib) {
+      val dx = o.px - px
+      val dy = o.py - py
+      val w = math.exp(-0.5 * (dx * dx + dy * dy) * invBw2)
+      if (w > 1e-12) {
+        val row = 1.0 +: o.f
+        for (i <- 0 until k) {
+          val wi = w * row(i)
+          for (j <- 0 until k) xtx(i)(j) += wi * row(j)
+          xty(i) += wi * o.y
+        }
+      }
+    }
+    val m = Array.tabulate(k)(i => xtx(i) :+ xty(i))
+    for (c <- 0 until k) {
+      val piv = (c until k).reduce((a, b) => if (math.abs(m(b)(c)) > math.abs(m(a)(c))) b else a)
+      val tmp = m(c); m(c) = m(piv); m(piv) = tmp
+      if (math.abs(m(c)(c)) < 1e-12) m(c)(c) = 1e-12
+      for (i <- 0 until k if i != c && m(i)(c) != 0.0) {
+        val factor = m(i)(c) / m(c)(c)
+        for (j <- c to k) m(i)(j) -= factor * m(c)(j)
+      }
+    }
+    Array.tabulate(k)(i => m(i)(k) / m(i)(i))
+  }
+
+  test("GWR: the shared kernel is bit-identical to the per-row loop") {
+    val rnd = new scala.util.Random(20261020)
+    val obs = Array.tabulate(3000) { _ =>
+      val (px, py) = (rnd.nextDouble() * 10, rnd.nextDouble() * 10)
+      val (f1, f2) = (rnd.nextDouble(), rnd.nextGaussian() * 4)
+      GWR.Obs(px, py, Array(f1, f2), 0.3 + 0.05 * px * f1 - 0.02 * f2 + 0.01 * rnd.nextGaussian())
+    }
+    val calib = GWR.Calib(obs)
+    val bw = 0.5
+    val targets = Seq((0.0, 0.0), (5.0, 5.0), (9.7, 2.3), (3.3, 8.8), (10.0, 10.0))
+    targets.foreach { case (px, py) =>
+      // the 1e-12 cutoff is exercised: far rows are skipped at every target
+      assert(obs.exists { o =>
+        val (dx, dy) = (o.px - px, o.py - py)
+        math.exp(-0.5 * (dx * dx + dy * dy) / (bw * bw)) <= 1e-12
+      })
+      assert(GWR.fitAt(px, py, calib, bw).toSeq == naiveFitAt(px, py, obs, bw).toSeq, s"at ($px, $py)")
+    }
   }
 
   test("GWR: biomass formula P6") {
@@ -87,21 +141,21 @@ class MlSpec extends AnyFunSuite {
 
   // a smooth spatially-varying surface: slope drifts across x, so a local
   // (small-k) fit beats the global one and AICc has an interior optimum
-  private def syntheticSurface(n: Int, noise: Double, seed: Int): Array[GWR.Obs] = {
+  private def syntheticSurface(n: Int, noise: Double, seed: Int): GWR.Calib = {
     val rnd = new scala.util.Random(seed)
-    Array.tabulate(n) { _ =>
+    GWR.Calib(Array.tabulate(n) { _ =>
       val px = rnd.nextDouble() * 10
       val py = rnd.nextDouble() * 10
       val f1 = rnd.nextDouble() * 5
       val slope = 1.0 + 0.4 * px // coefficient varies over space
       GWR.Obs(px, py, Array(f1), 2.0 + slope * f1 + noise * rnd.nextGaussian())
-    }
+    })
   }
 
   test("M1: golden-section converges to the AICc minimizer on a synthetic surface") {
     val calib = syntheticSurface(n = 120, noise = 0.05, seed = 7)
     val lo = 10
-    val hi = calib.length
+    val hi = calib.n
     val chosen = GWR.bandwidthAdaptiveAicc(calib, kMin = lo, kMax = hi)
     val exhaustive = (lo to hi).map(k => k -> GWR.aiccAdaptive(calib, k))
     val globalMin = exhaustive.minBy(_._2)
@@ -114,8 +168,13 @@ class MlSpec extends AnyFunSuite {
 
   test("M1: a smaller-than-global bandwidth wins when coefficients vary in space") {
     val calib = syntheticSurface(n = 120, noise = 0.05, seed = 11)
-    val chosen = GWR.bandwidthAdaptiveAicc(calib, kMin = 10, kMax = calib.length)
-    assert(chosen < calib.length) // local structure → interior optimum
+    val chosen = GWR.bandwidthAdaptiveAicc(calib, kMin = 10, kMax = calib.n)
+    assert(chosen < calib.n) // local structure → interior optimum
+  }
+
+  test("M1: AICc value pinned (the leverage fit runs on the shared kernel)") {
+    // the value the per-row kernel computed on this surface
+    assert(GWR.aiccAdaptive(syntheticSurface(n = 60, noise = 0.05, seed = 7), 20) == 264.97126983464926)
   }
 
   test("M1: AICc rejects the saturated end (denominator guard)") {
